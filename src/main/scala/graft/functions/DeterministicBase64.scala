@@ -68,7 +68,8 @@ object DeterministicBase64 {
         j += 1
       }
     }
-    UTF8String.fromString(java.util.Base64.getEncoder.encodeToString(bytes))
+    // base64 output is ASCII, so its bytes are already the UTF-8 string
+    UTF8String.fromBytes(java.util.Base64.getEncoder.encode(bytes))
   }
 
   /** Column API. */

@@ -1,6 +1,7 @@
 package graft.gen
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumns}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 
 /** Deterministic, seeded replacements for the reference's javafaker fields.
@@ -76,9 +77,22 @@ object Fake {
     "Salamander", "Tapir", "Urchin", "Vulture", "Wombat", "Xerus",
     "Yak", "Zebra", "Otter", "Puffin", "Stoat", "Toucan", "Walrus", "Lynx")
 
-  /** Stable 64-bit stream per (seed, field, id). */
-  def h(seed: Long, field: String, id: Column): Column =
-    xxhash64(lit(seed), lit(field), id)
+  /** Stable 64-bit stream per (seed, field, id): `xxhash64(seed, field, id)`.
+    * `HashExpression` chains its children through the hash seed, so the
+    * literal prefix (seed, field) is hashed once here on the driver and
+    * becomes the seed of a one-child hash — the same bits, one hash step
+    * per row instead of three.
+    */
+  def h(seed: Long, field: String, id: Column): Column = {
+    val prefix = new XxHash64(Seq(Literal(seed), Literal(field))).eval().asInstanceOf[Long]
+    GraftColumns.column(XxHash64(Seq(GraftColumns.expression(id)), prefix))
+  }
+
+  /** `x` in decimal, zero-padded to `width` digits; `x` must be
+    * non-negative and below 10^width (then it equals `%0<width>d`).
+    */
+  private def zeroPad(x: Column, width: Int): Column =
+    lpad(x.cast("string"), width, "0")
 
   /** Deterministic pick from a lookup dimension. */
   def pick(values: Seq[String], seed: Long, field: String, id: Column): Column =
@@ -94,10 +108,10 @@ object Fake {
     * (reference: DataGenerator.java:475-478).
     */
   def idNumber(seed: Long, field: String, id: Column): Column =
-    format_string("%03d-%02d-%04d",
-      bounded(seed, field + ".a", id, 899) + 1,
-      bounded(seed, field + ".b", id, 99) + 1,
-      bounded(seed, field + ".c", id, 9999) + 1)
+    concat(
+      zeroPad(bounded(seed, field + ".a", id, 899) + 1, 3), lit("-"),
+      zeroPad(bounded(seed, field + ".b", id, 99) + 1, 2), lit("-"),
+      zeroPad(bounded(seed, field + ".c", id, 9999) + 1, 4))
 
   def firstName(seed: Long, id: Column): Column = pick(firstNames, seed, "firstName", id)
   def lastName(seed: Long, id: Column): Column = pick(lastNames, seed, "lastName", id)
@@ -111,7 +125,7 @@ object Fake {
     (bounded(seed, "streetNumber", id, 9899) + 100).cast("string")
 
   def zipCode(seed: Long, id: Column): Column =
-    format_string("%05d", bounded(seed, "zip", id, 99999))
+    zeroPad(bounded(seed, "zip", id, 99999), 5)
 
   /** ISO-8601 instant string for a birthday between 1946 and 2006
     * (shape of faker `date().birthday()`, reference DataGenerator.java:488).
@@ -129,25 +143,11 @@ object Fake {
 
   /** Deterministic `bytes`-byte random payload, base64-encoded — the
     * reference fills a 500-byte buffer from a shared Random and base64s it
-    * (reference: DataGenerator.java:456,:466,:500). Derivation: chained
-    * sha256 blocks over (seed, id, blockIdx), hex → unhex → base64.
-    * Pure built-in functions, codegen-friendly.
-    *
-    * Spark's `base64()` is MIME-chunked (CRLF every 76 chars); the
-    * reference uses the unchunked `Base64.getEncoder` — strip the CRLFs
-    * so the wire format matches.
+    * (reference: DataGenerator.java:456,:466,:500). Derivation: a
+    * splitmix64 stream seeded by (seed, id), encoded with the unchunked
+    * `Base64.getEncoder` the reference uses (Spark's `base64()` is
+    * MIME-chunked) — see `DeterministicBase64`.
     */
   def payloadBase64(seed: Long, id: Column, bytes: Int = 500): Column =
     graft.functions.DeterministicBase64.deterministic_base64(lit(seed), id, bytes)
-
-  /** Prior built-ins-only derivation (sha512 blocks) — kept as the
-    * fallback path with zero custom-expression surface.
-    */
-  def payloadBase64Sha(seed: Long, id: Column, bytes: Int = 500): Column = {
-    val blocks = (bytes + 63) / 64 // sha512 = 64 bytes per block
-    val hexAll = concat_ws("", transform(
-      sequence(lit(0), lit(blocks - 1)),
-      i => sha2(concat_ws(":", lit(seed), id.cast("string"), i.cast("string")), 512)))
-    translate(base64(unhex(substring(hexAll, 1, bytes * 2))), "\r\n", "")
-  }
 }

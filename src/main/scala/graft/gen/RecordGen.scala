@@ -1,5 +1,6 @@
 package graft.gen
 
+import graft.functions.FromJson
 import graft.schema.Schemas
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,8 +19,12 @@ import org.apache.spark.sql.functions._
   *    (DataGenerator.java:204-210, SURVEY §1.5)
   *
   * Scale: `spark.range(n, numPartitions)` is an embarrassingly parallel
-  * source; every derived column is a codegen'd expression — no shuffle
-  * anywhere in the generation path, so it scales linearly with executors.
+  * source with no shuffle anywhere in the generation path, so it scales
+  * linearly with executors. `CollapseProject` inlines the generator and
+  * `to_json` into the parse's projection, so one `CodegenFallback` among
+  * them would run the whole tree interpreted. None is there: the parse
+  * goes through `FromJson`, and the `Fake` fields are built-in codegen'd
+  * expressions or `DeterministicBase64` (pinned by PlanSpec).
   */
 object RecordGen {
 
@@ -108,11 +113,13 @@ object RecordGen {
         struct(lit("X-Animal").as("key"), encode(col("animal"), "UTF-8").as("value"))
       ).as("headers"))
 
-  /** Consumer-side parse: wire bytes back to typed columns (SURVEY §1.6). */
+  /** Consumer-side parse: wire bytes back to typed columns (SURVEY §1.6),
+    * with `from_json` semantics through the codegen'd `FromJson`.
+    */
   def parseWire(wire: DataFrame): DataFrame =
     wire.select(
       col("topic"), col("partition"),
-      from_json(col("key").cast("string"), Schemas.keySchema).as("key"),
-      from_json(col("value").cast("string"), Schemas.valueSchema).as("value"),
+      FromJson.from_json(col("key").cast("string"), Schemas.keySchema).as("key"),
+      FromJson.from_json(col("value").cast("string"), Schemas.valueSchema).as("value"),
       col("headers"))
 }

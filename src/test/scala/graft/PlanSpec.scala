@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 
 /** Plan-regression gate: asserts the physical-plan SHAPE of the declared
   * queries, not just their results. A future change that un-pushes a
@@ -1224,5 +1225,17 @@ class PlanSpec extends SparkSuite {
       org.apache.spark.sql.execution.FormattedMode)
     assert(p.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,42)]"),
       s"plan:\n$p")
+  }
+
+  // CollapseProject inlines the generator and to_json into the parse's
+  // projection, so a single CodegenFallback anywhere in that tree (e.g.
+  // Spark's own from_json, or a future generator field) runs the whole
+  // datagen loop interpreted
+  test("datagen loop (generator -> wire -> parse) has no CodegenFallback") {
+    val df = gen.RecordGen.parseWire(gen.RecordGen.toWire(gen.RecordGen.records(spark, 10)))
+    val fallbacks = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: CodegenFallback => e.prettyName
+    }))
+    assert(fallbacks.isEmpty, s"interpreted expressions in the datagen loop: ${fallbacks.distinct}")
   }
 }
