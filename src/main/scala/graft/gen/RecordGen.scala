@@ -115,6 +115,14 @@ object RecordGen {
 
   /** Consumer-side parse: wire bytes back to typed columns (SURVEY §1.6),
     * with `from_json` semantics through the codegen'd `FromJson`.
+    *
+    * A key or value in the form `toWire` writes (compact JSON, fields of
+    * the declared schema, strings of printable ASCII with no escapes) is
+    * read straight from its bytes by `FromJson`'s canonical-form reader.
+    * Anything else (escapes, non-ASCII or invalid UTF-8, whitespace,
+    * unknown or repeated keys, numbers or booleans, malformed or trailing
+    * bytes) goes whole to Spark's `JsonToStructsEvaluator`. Both give the
+    * rows Spark's `from_json` gives.
     */
   def parseWire(wire: DataFrame): DataFrame =
     wire.select(
